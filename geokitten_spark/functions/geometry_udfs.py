@@ -2,8 +2,10 @@
 
 Geometry travels in Spark columns as WKT ``STRING`` at the API edge
 (SURVEY.md §1.2); kernels parse once per Arrow batch and loop geometries in
-Python with numpy coordinate math. All UDFs are deterministic pure functions
-(stage-retry and snapshot-resume safe, SURVEY §4).
+Python with numpy coordinate math; edge-pair scans (bowtie repair,
+``intersects``, difference clipping) run as one blocked numpy kernel per
+ring pair (``geom.kernels.segment_crossings``). All UDFs are deterministic
+pure functions (stage-retry and snapshot-resume safe, SURVEY §4).
 """
 
 from __future__ import annotations

@@ -9,13 +9,15 @@ classic Greiner–Hormann clipping for proper edge crossings, with explicit
 handling of the three non-crossing cases (disjoint, subject-inside-clip,
 clip-inside-subject → hole). Vertex-degenerate inputs fall back to returning
 the subject unchanged (documented limitation; property-tested via area
-invariants per SURVEY §7).
+invariants per SURVEY §7). Phase 1's edge-pair scan runs as one blocked
+numpy kernel (``kernels.segment_crossings``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from .kernels import segment_crossings
 from .model import Geometry, GeomKind
 
 __all__ = ["polygon_difference", "intersection_area", "ring_intersection_area"]
@@ -81,40 +83,23 @@ def _insert_sorted(edge_start: _V, v: _V):
 
 
 def _phase1(subj_head: _V, clip_head: _V) -> int:
-    """Find proper crossings, insert paired intersection vertices."""
-    count = 0
-    subj_edges = [(v, v.next) for v in _iter_ring(subj_head) if not v.intersect]
-    clip_edges = [(w, w.next) for w in _iter_ring(clip_head) if not w.intersect]
-    for s0, s1 in subj_edges:
-        # skip over already-inserted intersections to the true edge end
-        s_end = s1
-        while s_end.intersect:
-            s_end = s_end.next
-        p0 = np.array(s0.xy)
-        p1 = np.array(s_end.xy)
-        for c0, c1 in clip_edges:
-            c_end = c1
-            while c_end.intersect:
-                c_end = c_end.next
-            q0 = np.array(c0.xy)
-            q1 = np.array(c_end.xy)
-            d1 = p1 - p0
-            d2 = q1 - q0
-            denom = d1[0] * d2[1] - d1[1] * d2[0]
-            if denom == 0.0:
-                continue
-            t = ((q0[0] - p0[0]) * d2[1] - (q0[1] - p0[1]) * d2[0]) / denom
-            u = ((q0[0] - p0[0]) * d1[1] - (q0[1] - p0[1]) * d1[0]) / denom
-            if 0.0 < t < 1.0 and 0.0 < u < 1.0:
-                pt = p0 + t * d1
-                vs = _V(pt, alpha=t, intersect=True)
-                vc = _V(pt, alpha=u, intersect=True)
-                vs.neighbor = vc
-                vc.neighbor = vs
-                _insert_sorted(s0, vs)
-                _insert_sorted(c0, vc)
-                count += 1
-    return count
+    """Find proper crossings between the rings' original edges and insert
+    paired intersection vertices, in row-major (subject, clip) edge order."""
+    subj = list(_iter_ring(subj_head))
+    clip = list(_iter_ring(clip_head))
+    ps = np.array([v.xy for v in subj])
+    pc = np.array([w.xy for w in clip])
+    ps1 = np.roll(ps, -1, axis=0)  # node → next node, wrapping like the ring
+    si, cj, t, u = segment_crossings(ps, ps1, pc, np.roll(pc, -1, axis=0))
+    for i, j, ti, uj in zip(si, cj, t, u):
+        pt = ps[i] + ti * (ps1[i] - ps[i])
+        vs = _V(pt, alpha=ti, intersect=True)
+        vc = _V(pt, alpha=uj, intersect=True)
+        vs.neighbor = vc
+        vc.neighbor = vs
+        _insert_sorted(subj[i], vs)
+        _insert_sorted(clip[j], vc)
+    return len(si)
 
 
 def _phase2(head: _V, other_ring: np.ndarray, invert: bool):

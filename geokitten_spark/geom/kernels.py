@@ -3,7 +3,8 @@
 Each kernel reproduces the observable behavior of a GeoKitten operation
 (file:line citations into /root/reference) without shapely/GEOS. They run
 batched inside vectorized pandas UDFs (geometry loop in Python, coordinate
-math in numpy) — per SURVEY.md §2.3.
+math in numpy) — per SURVEY.md §2.3. Every edge-pair scan (bowtie repair,
+``intersects``, clipping) runs as one blocked numpy kernel, ``segment_crossings``.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ __all__ = [
     "points_in_rings",
     "interior_point",
     "repair_bowtie",
+    "segment_crossings",
     "intersects",
     "difference",
 ]
@@ -345,18 +347,32 @@ def interior_point(g: Geometry) -> Geometry:
 # Validity repair  (reference: gdf_standardization.py:791-804 — buffer(0))
 # ---------------------------------------------------------------------------
 
-def _seg_intersection(p0, p1, q0, q1):
-    """Proper segment intersection point or None (parallel/collinear → None)."""
-    d1 = p1 - p0
-    d2 = q1 - q0
-    denom = d1[0] * d2[1] - d1[1] * d2[0]
-    if denom == 0.0:
-        return None
-    t = ((q0[0] - p0[0]) * d2[1] - (q0[1] - p0[1]) * d2[0]) / denom
-    u = ((q0[0] - p0[0]) * d1[1] - (q0[1] - p0[1]) * d1[0]) / denom
-    if 0.0 < t < 1.0 and 0.0 < u < 1.0:
-        return p0 + t * d1
-    return None
+_CROSSING_BLOCK_PAIRS = 1 << 16  # edge pairs per broadcast block (~0.5 MB per temporary)
+
+
+def segment_crossings(p0, p1, q0, q1):
+    """Proper crossings of every edge ``p0[i]→p1[i]`` with every edge
+    ``q0[j]→q1[j]`` (float64 ``(n, 2)``/``(m, 2)`` arrays) as ``(i, j, t, u)``
+    arrays in row-major order; the point is ``p0[i] + t·(p1[i] − p0[i])``.
+    Strict ``0 < t, u < 1``: parallel (``denom == 0``), touching and NaN
+    pairs never cross. Broadcast over blocks of rows with the same float64
+    operations, in the same order, as the one-pair scalar formula."""
+    px, py = p0[:, 0, None], p0[:, 1, None]
+    d1x, d1y = p1[:, 0, None] - px, p1[:, 1, None] - py
+    qx, qy = q0[:, 0], q0[:, 1]
+    d2x, d2y = q1[:, 0] - qx, q1[:, 1] - qy
+    step = max(1, _CROSSING_BLOCK_PAIRS // max(len(q0), 1))
+    out = [(np.empty(0, np.intp), np.empty(0, np.intp), np.empty(0), np.empty(0))]
+    with np.errstate(all="ignore"):
+        for s in range(0, len(p0), step):
+            b = slice(s, s + step)
+            denom = d1x[b] * d2y - d1y[b] * d2x
+            ex, ey = qx - px[b], qy - py[b]
+            t = (ex * d2y - ey * d2x) / denom
+            u = (ex * d1y[b] - ey * d1x[b]) / denom
+            bi, bj = np.nonzero((denom != 0.0) & (0.0 < t) & (t < 1.0) & (0.0 < u) & (u < 1.0))
+            out.append((bi + s, bj, t[bi, bj], u[bi, bj]))
+    return tuple(np.concatenate(c) for c in zip(*out))
 
 
 def repair_bowtie(g: Geometry) -> Geometry:
@@ -370,19 +386,16 @@ def repair_bowtie(g: Geometry) -> Geometry:
     ring = np.asarray(g.parts[0][0], dtype=np.float64)[:, :2]
     n = len(ring) - 1
     # collect intersections per edge
-    per_edge = {i: [] for i in range(n)}
-    found = False
-    for i in range(n):
-        for j in range(i + 1, n):
-            if j == i or (i == 0 and j == n - 1) or j == i + 1:
-                continue
-            pt = _seg_intersection(ring[i], ring[i + 1], ring[j], ring[j + 1])
-            if pt is not None:
-                found = True
-                per_edge[i].append((np.linalg.norm(pt - ring[i]), tuple(pt)))
-                per_edge[j].append((np.linalg.norm(pt - ring[j]), tuple(pt)))
-    if not found:
+    e0, e1 = ring[:-1], ring[1:]
+    ci, cj, ct, _ = segment_crossings(e0, e1, e0, e1)
+    keep = (cj > ci + 1) & ~((ci == 0) & (cj == n - 1))  # non-adjacent, i < j
+    if not keep.any():
         return g
+    per_edge = {i: [] for i in range(n)}
+    for i, j, t in zip(ci[keep], cj[keep], ct[keep]):
+        pt = e0[i] + t * (e1[i] - e0[i])
+        per_edge[i].append((np.linalg.norm(pt - ring[i]), tuple(pt)))
+        per_edge[j].append((np.linalg.norm(pt - ring[j]), tuple(pt)))
     # noded vertex sequence
     seq = []
     for i in range(n):
@@ -432,10 +445,8 @@ def _any_edge_crossing(a: Geometry, b: Geometry) -> bool:
             for rb in b.parts:
                 for ring_b in rb:
                     arr_b = np.asarray(ring_b, dtype=np.float64)[:, :2]
-                    for i in range(len(arr_a) - 1):
-                        for j in range(len(arr_b) - 1):
-                            if _seg_intersection(arr_a[i], arr_a[i + 1], arr_b[j], arr_b[j + 1]) is not None:
-                                return True
+                    if len(segment_crossings(arr_a[:-1], arr_a[1:], arr_b[:-1], arr_b[1:])[0]):
+                        return True
     return False
 
 
@@ -455,13 +466,12 @@ def intersects(a: Geometry, b: Geometry) -> bool:
     return _any_edge_crossing(a, b)
 
 
-from .clip import polygon_difference  # noqa: E402  (cycle-free: clip imports model only)
-
-
 def difference(target: Geometry, sub: Geometry) -> Geometry:
     """``target.difference(sub)`` applied only when they intersect —
     mirrors ``_get_differenced_geometry`` (gdf_standardization.py:944-967):
     non-intersecting pairs return the target unchanged."""
+    from .clip import polygon_difference  # clip imports this module
+
     if not intersects(target, sub):
         return target
     return polygon_difference(target, sub)

@@ -128,8 +128,13 @@ def polygon_overlap_join(
     res: int = 5,
 ) -> DataFrame:
     """All (left, right) polygon pairs with positive intersection area →
-    (id_a, id_b, inter_area). Self-join callers should filter
-    ``id_a < id_b`` afterwards to halve the refine work."""
+    (id_a, id_b, inter_area). Self-join callers filter ``id_a < id_b``
+    afterwards; Catalyst pushes that filter into the cover join's
+    condition, so no self-pair and only one order of each pair reaches the
+    refine. The plan evaluates each Python UDF twice, because Catalyst
+    inlines it into the filter above it: ``wkt_bbox`` once for the
+    not-null filter and once for the cover, and the refine once for
+    ``inter_area > 0`` and once for the output column."""
     # aliases keep a self-join (left is right) unambiguous
     cov_l = bbox_cell_cover(left, id_left, wkt_left, res).alias("covL")
     cov_r = bbox_cell_cover(right, id_right, wkt_right, res).alias("covR")

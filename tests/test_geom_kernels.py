@@ -255,6 +255,14 @@ def test_repair_valid_unchanged():
     assert repair_bowtie(g) is g
 
 
+def test_repair_first_and_last_edge_count_as_adjacent():
+    """Even on an unclosed ring, edges 0 and n−1 are never tested against
+    each other (here they cross at (1, 1)), so nothing is repaired."""
+    ring = np.array([[0, 0], [2, 2], [3, 2], [3, -1], [0, 2]], dtype=np.float64)
+    g = Geometry(GeomKind.POLYGON, parts=[[ring]])
+    assert repair_bowtie(g) is g
+
+
 # ---- intersects + difference (overlap pair, FIXTURES.md §4) -------------
 
 def test_intersects_overlap_pair():
@@ -309,6 +317,185 @@ def test_difference_hexagons():
     out = difference(a, b)
     area_a = geometry_area(a)
     assert 0 < geometry_area(out) < area_a
+
+
+# ---- segment_crossings vs the scalar edge-pair loop it replaced ----------
+
+def _scalar_tu(p0, p1, q0, q1):
+    """One edge pair, scalar float64 — the formula the kernel vectorizes."""
+    d1 = p1 - p0
+    d2 = q1 - q0
+    denom = d1[0] * d2[1] - d1[1] * d2[0]
+    if denom == 0.0:
+        return None
+    t = ((q0[0] - p0[0]) * d2[1] - (q0[1] - p0[1]) * d2[0]) / denom
+    u = ((q0[0] - p0[0]) * d1[1] - (q0[1] - p0[1]) * d1[0]) / denom
+    if 0.0 < t < 1.0 and 0.0 < u < 1.0:
+        return t, u
+    return None
+
+
+def _loop_crossings(p0, p1, q0, q1):
+    """Oracle: row-major double loop over every edge pair."""
+    hits = []
+    with np.errstate(all="ignore"):
+        for i in range(len(p0)):
+            for j in range(len(q0)):
+                tu = _scalar_tu(p0[i], p1[i], q0[j], q1[j])
+                if tu is not None:
+                    hits.append((i, j, *tu))
+    cols = list(zip(*hits)) or [(), (), (), ()]
+    return (np.array(cols[0], dtype=np.intp), np.array(cols[1], dtype=np.intp),
+            np.array(cols[2], dtype=np.float64), np.array(cols[3], dtype=np.float64))
+
+
+def _assert_same_crossings(got, want):
+    assert got[0].tolist() == want[0].tolist()
+    assert got[1].tolist() == want[1].tolist()
+    assert got[2].tobytes() == want[2].tobytes()  # t bit-for-bit
+    assert got[3].tobytes() == want[3].tobytes()  # u bit-for-bit
+
+
+def _edges(ring):
+    r = np.asarray(ring, dtype=np.float64)
+    return r[:-1], r[1:]
+
+
+def _star(rng, cx, cy, r, n, shuffle=0):
+    """Closed star-shaped ring; ``shuffle`` swaps vertex pairs to make it
+    self-crossing."""
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = r * rng.uniform(0.5, 1.5, n)
+    xy = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    for _ in range(shuffle):
+        a, b = rng.integers(0, n, 2)
+        xy[[a, b]] = xy[[b, a]]
+    return np.vstack([xy, xy[:1]])
+
+
+def _same_geometry(a, b):
+    assert a.kind == b.kind
+    assert len(a.parts) == len(b.parts)
+    for ra, rb in zip(a.parts, b.parts):
+        assert [np.asarray(r).tobytes() for r in ra] == [np.asarray(r).tobytes() for r in rb]
+
+
+def test_segment_crossings_matches_loop_on_random_rings():
+    from geokitten_spark.geom.kernels import segment_crossings
+
+    rng = np.random.default_rng(11)
+    for k in range(40):
+        a = _star(rng, 0, 0, 1.0, int(rng.integers(3, 60)), shuffle=k % 4)
+        b = _star(rng, rng.uniform(-1, 1), rng.uniform(-1, 1), 1.0, int(rng.integers(3, 60)))
+        _assert_same_crossings(segment_crossings(*_edges(a), *_edges(a)), _loop_crossings(*_edges(a), *_edges(a)))
+        _assert_same_crossings(segment_crossings(*_edges(a), *_edges(b)), _loop_crossings(*_edges(a), *_edges(b)))
+
+
+def test_segment_crossings_degenerate_edges():
+    from geokitten_spark.geom.kernels import segment_crossings
+
+    nan = float("nan")
+    cases = {
+        # (p0, p1, q0, q1) edge lists; expected (i, j) hits
+        "proper": ([[0, 0]], [[2, 2]], [[0, 2]], [[2, 0]], [(0, 0)]),
+        "collinear_overlap": ([[0, 0]], [[2, 0]], [[1, 0]], [[3, 0]], []),
+        "shared_endpoint": ([[0, 0]], [[1, 1]], [[1, 1]], [[2, 0]], []),
+        "t_junction": ([[0, 0]], [[2, 0]], [[1, 0]], [[1, 1]], []),
+        "zero_length": ([[1, 1], [0, 0]], [[1, 1], [2, 2]], [[1, 1], [0, 2]], [[1, 1], [2, 0]], [(1, 1)]),
+        "nan": ([[nan, 0], [0, 0]], [[2, 2], [2, 2]], [[0, 2], [0, nan]], [[2, 0], [2, 0]], [(1, 0)]),
+    }
+    for name, (p0, p1, q0, q1, want) in cases.items():
+        p0, p1, q0, q1 = (np.array(e, dtype=np.float64) for e in (p0, p1, q0, q1))
+        got = segment_crossings(p0, p1, q0, q1)
+        _assert_same_crossings(got, _loop_crossings(p0, p1, q0, q1))
+        assert list(zip(got[0].tolist(), got[1].tolist())) == want, name
+    # rounded random rings: many collinear runs and shared vertices
+    rng = np.random.default_rng(3)
+    for _ in range(30):
+        r = np.round(rng.uniform(0, 4, size=(int(rng.integers(3, 25)), 2)))
+        r = np.vstack([r, r[:1]])
+        _assert_same_crossings(segment_crossings(*_edges(r), *_edges(r)), _loop_crossings(*_edges(r), *_edges(r)))
+    empty = np.empty((0, 2))
+    assert all(len(c) == 0 for c in segment_crossings(empty, empty, *_edges(r)))
+    assert all(len(c) == 0 for c in segment_crossings(*_edges(r), empty, empty))
+
+
+def test_segment_crossings_block_path(monkeypatch):
+    from geokitten_spark.geom import kernels
+
+    rng = np.random.default_rng(5)
+    a = _star(rng, 0, 0, 1.0, 50, shuffle=6)
+    b = _star(rng, 0.3, 0.2, 1.0, 40, shuffle=3)
+    want = _loop_crossings(*_edges(a), *_edges(b))
+    assert len(want[0]) > 10
+    for block in (1, 7, 39, 41, 200):
+        monkeypatch.setattr(kernels, "_CROSSING_BLOCK_PAIRS", block)
+        _assert_same_crossings(kernels.segment_crossings(*_edges(a), *_edges(b)), want)
+
+
+def _loop_phase1(subj_head, clip_head):
+    """Oracle: the scalar per-edge-pair crossing insertion over the
+    linked-list rings (skips already-inserted intersections)."""
+    from geokitten_spark.geom.clip import _V, _insert_sorted, _iter_ring
+
+    count = 0
+    subj_edges = [(v, v.next) for v in _iter_ring(subj_head) if not v.intersect]
+    clip_edges = [(w, w.next) for w in _iter_ring(clip_head) if not w.intersect]
+    for s0, s1 in subj_edges:
+        s_end = s1
+        while s_end.intersect:
+            s_end = s_end.next
+        p0, p1 = np.array(s0.xy), np.array(s_end.xy)
+        for c0, c1 in clip_edges:
+            c_end = c1
+            while c_end.intersect:
+                c_end = c_end.next
+            tu = _scalar_tu(p0, p1, np.array(c0.xy), np.array(c_end.xy))
+            if tu is not None:
+                pt = p0 + tu[0] * (p1 - p0)
+                vs = _V(pt, alpha=tu[0], intersect=True)
+                vc = _V(pt, alpha=tu[1], intersect=True)
+                vs.neighbor = vc
+                vc.neighbor = vs
+                _insert_sorted(s0, vs)
+                _insert_sorted(c0, vc)
+                count += 1
+    return count
+
+
+def test_crossing_callers_match_loop_oracles(monkeypatch):
+    """repair_bowtie / intersects / intersection_area / polygon_difference
+    give exactly the results of their scalar-loop versions."""
+    from geokitten_spark.geom import clip, kernels
+
+    rng = np.random.default_rng(17)
+    geoms = []
+    for k in range(24):
+        n = int(rng.integers(4, 40))
+        ring = _star(rng, rng.uniform(0, 2), rng.uniform(0, 2), 1.0, n, shuffle=k % 3)
+        geoms.append(Geometry(GeomKind.POLYGON, parts=[[ring]]))
+    # an unclosed ring: clip edges wrap from the last node to the first
+    geoms.append(Geometry(GeomKind.POLYGON, parts=[[_star(rng, 1, 1, 1.0, 9)[:-1]]]))
+    pairs = [(a, b) for a in geoms for b in geoms[:8]]
+
+    def run():
+        return (
+            [repair_bowtie(g) for g in geoms],
+            [intersects(a, b) for a, b in pairs],
+            [float(clip.intersection_area(a, b)).hex() for a, b in pairs],
+            [clip.polygon_difference(a, b) for a, b in pairs],
+        )
+
+    fast = run()
+    monkeypatch.setattr(kernels, "segment_crossings", _loop_crossings)
+    monkeypatch.setattr(clip, "_phase1", _loop_phase1)
+    slow = run()
+    assert sum(g.kind == GeomKind.MULTIPOLYGON for g in fast[0]) > 0  # some bowties repaired
+    assert 0 < sum(fast[1]) < len(pairs)
+    for a, b in zip(fast[0] + fast[3], slow[0] + slow[3]):
+        _same_geometry(a, b)
+    assert fast[1] == slow[1]
+    assert fast[2] == slow[2]
 
 
 # ---- STRtree -------------------------------------------------------------
