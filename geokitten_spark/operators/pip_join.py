@@ -1,19 +1,20 @@
-"""J2 — broadcast point-in-polygon spatial join (SURVEY.md §2.4).
+"""J2 — point-in-polygon (PIP) joins of docs (lon/lat) to boundary polygons
+(SURVEY.md §2.4). Three strategies, one exact refine kernel (``_refine``),
+identical rows — one per (doc, polygon) containment pair:
 
-Strategy (scale rationale):
-* The boundary set (admin polygons) is small relative to the docs table
-  (thousands vs 10^12 rows) → classic broadcast asymmetry. We build a packed
-  numpy STR-tree over polygon bboxes ONCE on the driver and ship it with
-  ``sc.broadcast`` — one copy per executor, not per task.
-* The docs side is never shuffled: the join is a ``mapInPandas`` over
-  whatever partitioning the scan produced; each Arrow batch does a
-  vectorized candidate lookup (tree) + exact even-odd ray-casting refine.
-* Skew-free by construction: work per partition is proportional to rows,
-  not to key frequency (no hot-cell shuffle key exists in this operator).
+* ``pip_join`` — broadcast R-tree: a packed numpy STR-tree over polygon-part
+  bboxes is built ONCE on the driver and broadcast (one copy per executor);
+  the docs side is never shuffled, each Arrow batch does a vectorized tree
+  lookup + refine, so work per partition is proportional to rows.
+* ``PolygonCover`` / ``H3PolygonCover`` — broadcast cell cover, one class
+  (``_CellCover``) with the cell family (square grid or H3) as parameter:
+  docs in inside cells match in a pure-JVM broadcast hash join, only
+  border-cell docs cross the Arrow boundary for the refine.
+* ``partitioned_pip_join`` — no driver index and no broadcast, for boundary
+  sets too big to ship: executors build the grid cover and one cell-keyed
+  join brings each polygon's WKT to its border cells for the refine.
 
-Equivalently expressible as cell-prefilter + refine (``cell_pip_join``)
-which IS shuffle-based — kept for the case where the boundary set is too
-big to broadcast (SURVEY §4 "custom Catalyst rule? none — explicit API").
+The caller picks the strategy (SURVEY §4: explicit API, no Catalyst rule).
 """
 
 from __future__ import annotations
@@ -27,16 +28,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..cells.grid import RES_SHIFT, X_SHIFT
+from ..functions.cells_udfs import grid_cell_col, h3_cell, h3_parent_col
 from ..geom import parse_wkt, points_in_rings
 from ..geom.rtree import STRtree
+from .tile import grid_parent_col
 
 __all__ = [
     "BoundaryIndex",
     "PolygonCover",
     "H3PolygonCover",
     "pip_join",
-    "cover_refine_pip_join",
+    "partitioned_pip_join",
 ]
+
+
+def _ring_parts(g) -> list:
+    """A geometry's polygon parts, each a list of (n, 2) float64 rings
+    (exterior first, then holes)."""
+    return [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
+
+
+def _refine(keys: np.ndarray, lons: np.ndarray, lats: np.ndarray, parts_of) -> np.ndarray:
+    """The exact refine of every PIP strategy. Candidate pair ``i`` is the
+    point ``(lons[i], lats[i])`` and the key ``keys[i]``; it is kept when
+    the point is inside any polygon part in ``parts_of(key)`` (even-odd
+    rule per part). Pairs are stable-sorted by key, so each key's rings are
+    ray-cast once over all of its points. Returns the keep mask in input
+    order."""
+    keep = np.zeros(len(keys), dtype=bool)
+    if len(keys) == 0:
+        return keep
+    order = np.argsort(keys, kind="stable")
+    bounds = np.flatnonzero(np.diff(keys[order])) + 1
+    for chunk in np.split(order, bounds):
+        inside = np.zeros(len(chunk), dtype=bool)
+        for rings in parts_of(int(keys[chunk[0]])):
+            inside |= points_in_rings(lons[chunk], lats[chunk], rings)
+        keep[chunk[inside]] = True
+    return keep
 
 
 class BoundaryIndex:
@@ -47,47 +77,23 @@ class BoundaryIndex:
         self.ids = list(ids)
         self.geoms = [parse_wkt(w) for w in wkts]
         # one entry per polygon PART so candidate refine touches only the part
-        part_boxes = []
-        self.part_owner = []
-        self.part_rings = []
-        for gi, g in enumerate(self.geoms):
-            for rings in g.parts:
-                ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-                part_boxes.append(
-                    (ext[:, 0].min(), ext[:, 1].min(), ext[:, 0].max(), ext[:, 1].max())
-                )
-                self.part_owner.append(gi)
-                self.part_rings.append([np.asarray(r, dtype=np.float64)[:, :2] for r in rings])
-        self.part_owner = np.asarray(self.part_owner, dtype=np.int64)
-        self.tree = STRtree(np.asarray(part_boxes, dtype=np.float64))
+        self.part_rings = [rings for g in self.geoms for rings in _ring_parts(g)]
+        self.part_owner = np.asarray(
+            [gi for gi, g in enumerate(self.geoms) for _ in g.parts], dtype=np.int64
+        )
+        self.tree = STRtree(np.asarray(
+            [(*r[0].min(axis=0), *r[0].max(axis=0)) for r in self.part_rings],
+            dtype=np.float64,
+        ))
 
     def locate(self, lons: np.ndarray, lats: np.ndarray):
         """(point_idx, polygon_idx) matches; a point inside k overlapping
         polygons yields k pairs (join semantics, not first-wins)."""
         pi, part_i = self.tree.query_points(lons, lats)
-        if len(pi) == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        out_p, out_g = [], []
-        # refine grouped by part: vectorize PIP over that part's candidates
-        order = np.argsort(part_i, kind="stable")
-        pi, part_i = pi[order], part_i[order]
-        bounds = np.flatnonzero(np.diff(part_i)) + 1
-        for chunk_p, chunk_part in zip(
-            np.split(pi, bounds), np.split(part_i, bounds)
-        ):
-            part = int(chunk_part[0])
-            inside = points_in_rings(lons[chunk_p], lats[chunk_p], self.part_rings[part])
-            hits = chunk_p[inside]
-            if len(hits):
-                out_p.append(hits)
-                out_g.append(np.full(len(hits), self.part_owner[part], dtype=np.int64))
-        if not out_p:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        out_p = np.concatenate(out_p)
-        out_g = np.concatenate(out_g)
+        hit = _refine(part_i, lons[pi], lats[pi], lambda k: [self.part_rings[k]])
+        out_p, out_g = pi[hit], self.part_owner[part_i[hit]]
         # a MULTIPOLYGON hit in 2 parts would duplicate: dedupe (point, geom)
-        key = out_p * (len(self.geoms) + 1) + out_g
-        _, uniq = np.unique(key, return_index=True)
+        _, uniq = np.unique(out_p * (len(self.geoms) + 1) + out_g, return_index=True)
         return out_p[uniq], out_g[uniq]
 
 
@@ -154,10 +160,36 @@ def pip_join(
 
 
 # ---------------------------------------------------------------------------
-# J2b — cover-refine PIP join (the 10^12-row fast path)
+# Driver-side cell covers
 # ---------------------------------------------------------------------------
 
-def _cover_cells(geoms: list, ids: list, res: int):
+def _int64_arrays(*cols):
+    return tuple(np.asarray(c, dtype=np.int64) for c in cols)
+
+
+def _subdivide(ring, step: float):
+    """Split every edge of ``ring`` into ceil(length / step) equal pieces
+    (length = max(|dx|, |dy|); at least one piece per edge). Returns the
+    pieces' start and end points as arrays ``(x0, y0, x1, y1)``."""
+    r = np.asarray(ring, dtype=np.float64)[:, :2]
+    ax, ay = r[:-1, 0], r[:-1, 1]
+    bx, by = r[1:, 0], r[1:, 1]
+    seg_len = np.maximum(np.abs(bx - ax), np.abs(by - ay))
+    n_sub = np.maximum(1, np.ceil(seg_len / step).astype(np.int64))
+    idx = np.repeat(np.arange(len(ax)), n_sub)
+    # piece number within its edge → fraction along the edge
+    k = np.arange(len(idx)) - np.repeat(np.cumsum(n_sub) - n_sub, n_sub)
+    t0, t1 = k / n_sub[idx], (k + 1) / n_sub[idx]
+    dx, dy = bx[idx] - ax[idx], by[idx] - ay[idx]
+    return ax[idx] + dx * t0, ay[idx] + dy * t0, ax[idx] + dx * t1, ay[idx] + dy * t1
+
+
+def _grid_id(res: int, ix, iy):
+    """Packed square-grid cell id (``cells/grid.py`` layout)."""
+    return (np.int64(res) << RES_SHIFT) | (np.int64(ix) << X_SHIFT) | np.int64(iy)
+
+
+def _cover_cells(geoms: list, res: int):
     """Driver-side cell cover: classify every grid cell in each polygon's
     bbox as fully-INSIDE (every point of the cell is inside the part) or
     BOUNDARY (some polygon edge's bbox overlaps the cell — conservative).
@@ -168,62 +200,36 @@ def _cover_cells(geoms: list, ids: list, res: int):
     Conservativeness only moves cells from the fast path to the refine
     path, never the reverse, so results are exact.
     """
-    from ..cells.grid import grid_cell, RES_SHIFT, X_SHIFT
-    from ..geom import points_in_rings
-
     n = np.int64(1) << res
     cell_w = 360.0 / float(n)
     cell_h = 180.0 / float(n)
+    # edges are SUBDIVIDED to sub-cell length so each piece's bbox marks only
+    # cells the edge actually crosses (a whole diagonal edge's bbox would
+    # mark O(len²) spurious cells)
+    step = 0.5 * min(cell_w, cell_h)
 
-    in_cells, in_pos = [], []
-    bd_cells, bd_pos = [], []
-
+    in_cells, in_pos, bd_cells, bd_pos = [], [], [], []
     for pos, g in enumerate(geoms):
         seen_inside: set = set()
         seen_border: set = set()
-        for rings in g.parts:
-            ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-            xmin, ymin = ext.min(axis=0)
-            xmax, ymax = ext.max(axis=0)
+        for rings in _ring_parts(g):
+            xmin, ymin = rings[0].min(axis=0)
+            xmax, ymax = rings[0].max(axis=0)
             ix0 = max(0, int(np.floor((xmin + 180.0) / 360.0 * n)))
             ix1 = min(int(n) - 1, int(np.floor((xmax + 180.0) / 360.0 * n)))
             iy0 = max(0, int(np.floor((ymin + 90.0) / 180.0 * n)))
             iy1 = min(int(n) - 1, int(np.floor((ymax + 90.0) / 180.0 * n)))
             if ix1 < ix0 or iy1 < iy0:
                 continue
-            nx = ix1 - ix0 + 1
-            ny = iy1 - iy0 + 1
-            # all edges of all rings, SUBDIVIDED to sub-cell length so each
-            # sub-edge bbox marks only cells the edge actually crosses (a
-            # whole diagonal edge's bbox would mark O(len²) spurious cells)
-            exs, eys, exe, eye = [], [], [], []
-            step = 0.5 * min(cell_w, cell_h)
-            for ring in rings:
-                r = np.asarray(ring, dtype=np.float64)[:, :2]
-                ax, ay = r[:-1, 0], r[:-1, 1]
-                bx, by = r[1:, 0], r[1:, 1]
-                seg_len = np.maximum(np.abs(bx - ax), np.abs(by - ay))
-                n_sub = np.maximum(1, np.ceil(seg_len / step).astype(np.int64))
-                idx = np.repeat(np.arange(len(ax)), n_sub)
-                # fraction along each edge for every sub-segment start/end
-                starts = np.concatenate([np.arange(k) for k in n_sub]) / n_sub[idx]
-                ends = np.concatenate([np.arange(1, k + 1) for k in n_sub]) / n_sub[idx]
-                sx0 = ax[idx] + (bx[idx] - ax[idx]) * starts
-                sx1 = ax[idx] + (bx[idx] - ax[idx]) * ends
-                sy0 = ay[idx] + (by[idx] - ay[idx]) * starts
-                sy1 = ay[idx] + (by[idx] - ay[idx]) * ends
-                exs.append(np.minimum(sx0, sx1))
-                exe.append(np.maximum(sx0, sx1))
-                eys.append(np.minimum(sy0, sy1))
-                eye.append(np.maximum(sy0, sy1))
-            e_x0 = np.concatenate(exs); e_x1 = np.concatenate(exe)
-            e_y0 = np.concatenate(eys); e_y1 = np.concatenate(eye)
-            # map each edge bbox to the cell range it touches
-            touched = np.zeros((nx, ny), dtype=bool)
-            c_x0 = np.clip(np.floor((e_x0 + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
-            c_x1 = np.clip(np.floor((e_x1 + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
-            c_y0 = np.clip(np.floor((e_y0 + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
-            c_y1 = np.clip(np.floor((e_y1 + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
+            sx0, sy0, sx1, sy1 = (
+                np.concatenate(c) for c in zip(*(_subdivide(r, step) for r in rings))
+            )
+            # map each piece's bbox to the cell range it touches
+            touched = np.zeros((ix1 - ix0 + 1, iy1 - iy0 + 1), dtype=bool)
+            c_x0 = np.clip(np.floor((np.minimum(sx0, sx1) + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
+            c_x1 = np.clip(np.floor((np.maximum(sx0, sx1) + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
+            c_y0 = np.clip(np.floor((np.minimum(sy0, sy1) + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
+            c_y1 = np.clip(np.floor((np.maximum(sy0, sy1) + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
             for a0, a1, b0, b1 in zip(c_x0, c_x1, c_y0, c_y1):
                 touched[a0 : a1 + 1, b0 : b1 + 1] = True
             # untouched cells are uniformly inside or outside: test centers
@@ -231,82 +237,17 @@ def _cover_cells(geoms: list, ids: list, res: int):
             if len(ux):
                 cx = -180.0 + (ux + ix0 + 0.5) * cell_w
                 cy = -90.0 + (uy + iy0 + 0.5) * cell_h
-                inside = points_in_rings(cx, cy, [np.asarray(r, dtype=np.float64)[:, :2] for r in rings])
-                for k in np.nonzero(inside)[0]:
-                    seen_inside.add((int(ux[k] + ix0), int(uy[k] + iy0)))
+                inside = points_in_rings(cx, cy, rings)
+                seen_inside.update(zip((ux[inside] + ix0).tolist(), (uy[inside] + iy0).tolist()))
             tx, ty = np.nonzero(touched)
-            for a, b in zip(tx, ty):
-                seen_border.add((int(a + ix0), int(b + iy0)))
+            seen_border.update(zip((tx + ix0).tolist(), (ty + iy0).tolist()))
         # a cell inside one part but on the border of another (overlapping
         # parts) must refine — border wins
         seen_inside -= seen_border
-        for ixv, iyv in seen_inside:
-            in_cells.append((np.int64(res) << RES_SHIFT) | (np.int64(ixv) << X_SHIFT) | np.int64(iyv))
-            in_pos.append(pos)
-        for ixv, iyv in seen_border:
-            bd_cells.append((np.int64(res) << RES_SHIFT) | (np.int64(ixv) << X_SHIFT) | np.int64(iyv))
-            bd_pos.append(pos)
-
-    return (
-        np.asarray(in_cells, dtype=np.int64),
-        np.asarray(in_pos, dtype=np.int64),
-        np.asarray(bd_cells, dtype=np.int64),
-        np.asarray(bd_pos, dtype=np.int64),
-    )
-
-
-def cover_refine_pip_join(
-    docs: DataFrame,
-    boundaries_pdf: pd.DataFrame,
-    *,
-    id_col: str,
-    wkt_col: str,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = 10,
-    cover: "PolygonCover | None" = None,
-    how: str = "inner",
-    doc_key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Exact PIP join via cell-cover prefilter + boundary-cell refine.
-
-    Scale design (SURVEY §4, north_rule): the driver classifies every grid
-    cell covering each polygon as fully-inside or boundary. Docs in
-    fully-inside cells match through a pure-JVM broadcast hash join — no
-    Python, no shuffle of the docs side. Only docs in boundary cells (the
-    polygon-perimeter fraction, ~O(perimeter·cell/area) of rows) cross the
-    Arrow exchange for the exact ray-cast refine — the same kernel
-    ``pip_join`` uses, so results are identical. At 10^12 rows this turns
-    the Python exchange from O(N) to O(N·ε).
-
-    Pass a prebuilt ``PolygonCover`` to amortize the driver-side cover
-    construction + broadcast across many joins (one boundary set serves the
-    whole pipeline).
-
-    Semantics match ``pip_join(how=...)``: one output row per
-    (doc, polygon) containment pair; ``how='left'`` additionally keeps
-    each unmatched doc once, with a null ``id_col``. Because matches come
-    from TWO paths (JVM fast join + Arrow refine), 'left' needs a doc
-    identity — pass ``doc_key_cols`` (a unique doc key, e.g.
-    ``['doc_id']``); the unmatched set is a key anti-join against the
-    matched set (one extra shuffle on the doc key — the inherent price of
-    left semantics on a fan-out join).
-    """
-    if cover is None:
-        cover = PolygonCover(
-            docs.sparkSession, boundaries_pdf, id_col=id_col, wkt_col=wkt_col, res=res
-        )
-    matched = cover.join(docs, lon_col=lon_col, lat_col=lat_col)
-    if how == "inner":
-        return matched
-    if how != "left":
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if not doc_key_cols:
-        raise ValueError("how='left' requires doc_key_cols (a unique doc key)")
-    unmatched = docs.join(
-        matched.select(*doc_key_cols).distinct(), on=doc_key_cols, how="left_anti"
-    ).withColumn(id_col, F.lit(None).cast(cover.id_type))
-    return matched.unionByName(unmatched)
+        for seen, cells, owners in ((seen_inside, in_cells, in_pos), (seen_border, bd_cells, bd_pos)):
+            cells.extend(_grid_id(res, ixv, iyv) for ixv, iyv in seen)
+            owners.extend([pos] * len(seen))
+    return _int64_arrays(in_cells, in_pos, bd_cells, bd_pos)
 
 
 def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: int):
@@ -314,8 +255,6 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
     of a parent cell are fully inside for the same polygon, replace them by
     the parent — repeatedly, down to ``min_res``. Shrinks the broadcast
     table ~5-10x (fits in L3, builds in ~0.1s) with identical semantics."""
-    from ..cells.grid import RES_SHIFT, X_SHIFT
-
     out_cells, out_pos = [], []
     ix = (in_cells >> X_SHIFT) & ((np.int64(1) << X_SHIFT) - 1)
     iy = in_cells & ((np.int64(1) << X_SHIFT) - 1)
@@ -326,20 +265,13 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
         # pos into the high bits overflows int64 for pos >= 32)
         order = np.lexsort((piy_all, pix_all, pos))
         p_s, x_s, y_s = pos[order], pix_all[order], piy_all[order]
-        new_grp = np.empty(len(order), dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (
-            (p_s[1:] != p_s[:-1]) | (x_s[1:] != x_s[:-1]) | (y_s[1:] != y_s[:-1])
-        )
+        new_grp = np.ones(len(order), dtype=bool)
+        new_grp[1:] = (p_s[1:] != p_s[:-1]) | (x_s[1:] != x_s[:-1]) | (y_s[1:] != y_s[:-1])
         grp_id = np.cumsum(new_grp) - 1
-        counts = np.bincount(grp_id)
-        full = counts == 4
-        promoted_mask = np.zeros(len(order), dtype=bool)
-        promoted_mask[order] = full[grp_id]
-        keep = ~promoted_mask
-        out_cells.append(
-            (np.int64(r) << RES_SHIFT) | (ix[keep] << X_SHIFT) | iy[keep]
-        )
+        full = np.bincount(grp_id) == 4
+        keep = np.ones(len(order), dtype=bool)
+        keep[order] = ~full[grp_id]
+        out_cells.append(_grid_id(r, ix[keep], iy[keep]))
         out_pos.append(pos[keep])
         # next level: one cell per full parent
         starts = np.flatnonzero(new_grp)[full]
@@ -347,39 +279,49 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
         if len(ix) == 0:
             break
     if len(ix):
-        out_cells.append((np.int64(min_res) << RES_SHIFT) | (ix << X_SHIFT) | iy)
+        out_cells.append(_grid_id(min_res, ix, iy))
         out_pos.append(pos)
     return np.concatenate(out_cells), np.concatenate(out_pos)
 
 
-class PolygonCover:
-    """Reusable cell-cover index over a boundary set: driver-side cover
-    classification (multi-resolution quadtree), the two broadcast-able
-    cover tables, and the refine kernel broadcast — built once, used by
-    every ``join``."""
+class _CellCover:
+    """Reusable broadcast cell-cover PIP join; the cell family is the only
+    thing its two subclasses change.
+
+    The driver classifies each polygon's cells once: *inside* cells (every
+    point of the cell is in the polygon; coarsened to ancestors down to
+    ``min_res``) become a broadcast ``(cell, id)`` table, *border* cells (the
+    boundary may cross them; conservative) a broadcast ``(cell, position)``
+    table, and the parsed rings one broadcast. ``join`` encodes each doc's
+    cell ONCE; the doc probes the inside table with that cell and its
+    ancestors in a pure-JVM broadcast hash join (no Python, no shuffle of
+    the docs side), and only border-cell docs cross the Arrow boundary for
+    the exact refine — identical rows to ``pip_join``, Python exchange
+    O(N·ε) instead of O(N).
+
+    A family supplies the driver-side cover (``_cover``), the doc encode
+    (``_encode``) and the pure-JVM ancestor column (``_parent``).
+    """
 
     def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
-                 wkt_col: str, res: int = 10, min_res: int = 6):
+                 wkt_col: str, res: int, min_res: int):
         self.id_col = id_col
         self.res = res
         self.min_res = min_res
         ids = boundaries_pdf[id_col].tolist()
         geoms = [parse_wkt(w) for w in boundaries_pdf[wkt_col].tolist()]
-        in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, ids, res)
-        if len(in_cells) and min_res < res:
-            in_cells, in_pos = _promote_cover(in_cells, in_pos, res, min_res)
+        in_cells, in_pos, bd_cells, bd_pos = self._cover(geoms)
         self.n_inside_cells = len(in_cells)
         self.n_border_cells = len(bd_cells)
 
         self.id_type = (
             StringType() if boundaries_pdf[id_col].dtype == object else LongType()
         )
-        cover_schema = StructType(
-            [StructField("__cell", LongType()), StructField(id_col, self.id_type)]
-        )
         self.inside_df = spark.createDataFrame(
-            pd.DataFrame({"__cell": in_cells, id_col: [ids[p] for p in in_pos]}),
-            schema=cover_schema,
+            pd.DataFrame({"__anc": in_cells, id_col: [ids[p] for p in in_pos]}),
+            schema=StructType(
+                [StructField("__anc", LongType()), StructField(id_col, self.id_type)]
+            ),
         )
         self.border_df = spark.createDataFrame(
             pd.DataFrame({"__cell": bd_cells, "__pos": bd_pos}),
@@ -387,65 +329,151 @@ class PolygonCover:
                 [StructField("__cell", LongType()), StructField("__pos", LongType())]
             ),
         )
-        parts_by_pos = [
-            [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
-            for g in geoms
-        ]
-        self._bc = spark.sparkContext.broadcast((parts_by_pos, ids))
+        self._bc = spark.sparkContext.broadcast(([_ring_parts(g) for g in geoms], ids))
 
     def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-        from ..functions.cells_udfs import grid_cell_col
-
         id_col = self.id_col
-        tagged = docs.withColumn(
-            "__cell", grid_cell_col(F.col(lon_col), F.col(lat_col), self.res)
+        # a doc without finite coordinates is in no polygon, and the H3
+        # encode raises on one (abs(NaN) < inf is false in Spark SQL)
+        finite = (F.abs(F.col(lon_col)) < math.inf) & (F.abs(F.col(lat_col)) < math.inf)
+        tagged = docs.filter(finite).withColumn(
+            "__cell", self._encode(F.col(lon_col), F.col(lat_col))
         )
-
-        # fast path: pure-JVM broadcast hash join against the multi-res
-        # cover — each doc probes with its ancestor cell at every cover
-        # level (explode is codegen; a doc matches a region at <=1 level
-        # because the quadtree cover is disjoint per region)
+        # a doc matches a polygon at <= 1 cover level: each polygon's
+        # coarsened inside cells are disjoint
         ancestors = F.array(
+            F.col("__cell"),
             *[
-                grid_cell_col(F.col(lon_col), F.col(lat_col), r)
-                for r in range(self.min_res, self.res + 1)
-            ]
+                self._parent(F.col("__cell"), self.res, r)
+                for r in range(self.res - 1, self.min_res - 1, -1)
+            ],
         )
-        probe = docs.withColumn("__cell", F.explode(ancestors))
-        fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
-
-        # refine path: only boundary-cell docs reach the Arrow exchange
+        fast = (
+            tagged.withColumn("__anc", F.explode(ancestors))
+            .drop("__cell")
+            .join(F.broadcast(self.inside_df), on="__anc")
+            .drop("__anc")
+        )
         cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
+
         bc = self._bc
-        refine_schema = StructType(
-            [f for f in docs.schema.fields] + [StructField(id_col, self.id_type, True)]
-        )
 
         def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts_all, ids_local = bc.value
-            ids_arr = np.asarray(ids_local, dtype=object)
+            parts_all, ids = bc.value
+            ids = np.asarray(ids, dtype=object)
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lons = pdf[lon_col].to_numpy(np.float64)
-                lats = pdf[lat_col].to_numpy(np.float64)
                 pos = pdf["__pos"].to_numpy(np.int64)
-                keep = np.zeros(len(pdf), dtype=bool)
-                order = np.argsort(pos, kind="stable")
-                bounds = np.flatnonzero(np.diff(pos[order])) + 1
-                for chunk in np.split(order, bounds):
-                    p = int(pos[chunk[0]])
-                    inside = np.zeros(len(chunk), dtype=bool)
-                    for rings in parts_all[p]:
-                        inside |= points_in_rings(lons[chunk], lats[chunk], rings)
-                    keep[chunk[inside]] = True
+                keep = _refine(
+                    pos,
+                    pdf[lon_col].to_numpy(np.float64),
+                    pdf[lat_col].to_numpy(np.float64),
+                    parts_all.__getitem__,
+                )
                 out = pdf.loc[keep].copy()
-                out[id_col] = ids_arr[out["__pos"].to_numpy(np.int64)]
+                out[id_col] = ids[pos[keep]]
                 yield out.drop(columns=["__pos"])
 
-        refined = cand.mapInPandas(refine, schema=refine_schema)
+        refined = cand.mapInPandas(
+            refine,
+            schema=StructType(docs.schema.fields + [StructField(id_col, self.id_type, True)]),
+        )
         return fast.unionByName(refined)
 
+
+class PolygonCover(_CellCover):
+    """Cell cover on the packed square grid (``cells/grid.py``): border
+    cells are the cells an edge passes through (``_cover_cells``); inside
+    cells fold into their quadtree parent wherever all four children are
+    inside, down to ``min_res`` (``_promote_cover``). Ancestors are integer
+    shifts of the encoded cell (``grid_parent_col``)."""
+
+    def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
+                 wkt_col: str, res: int = 10, min_res: int = 6):
+        super().__init__(spark, boundaries_pdf, id_col=id_col, wkt_col=wkt_col,
+                         res=res, min_res=min_res)
+
+    def _cover(self, geoms: list):
+        in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, self.res)
+        if len(in_cells) and self.min_res < self.res:
+            in_cells, in_pos = _promote_cover(in_cells, in_pos, self.res, self.min_res)
+        return in_cells, in_pos, bd_cells, bd_pos
+
+    def _encode(self, lon, lat):
+        return grid_cell_col(lon, lat, self.res)
+
+    _parent = staticmethod(grid_parent_col)
+
+
+class H3PolygonCover(_CellCover):
+    """Cell cover on canonical H3 cells.
+
+    * border — cells the boundary passes through (every ring sampled at
+      0.25x the cell spacing) DILATED by one kRing. Dilation makes the set
+      conservative: a corner-clipped cell whose boundary arc is shorter
+      than the sampling step is always within one ring of a sampled cell,
+      so no sliver is ever misclassified.
+    * inside — polygon_to_cells (center containment) minus the dilated
+      border. A cell whose center is inside and which is a full ring away
+      from every boundary-crossed cell is provably contained.
+
+    The doc encode is one vectorized H3 pandas UDF; ancestors are pure-JVM
+    digit truncation (``h3_parent_col``).
+    """
+
+    def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
+                 wkt_col: str, res: int = 3, min_res: int = 0):
+        super().__init__(spark, boundaries_pdf, id_col=id_col, wkt_col=wkt_col,
+                         res=res, min_res=min_res)
+
+    def _cover(self, geoms: list):
+        from ..cells import h3core
+
+        res, min_res = self.res, self.min_res
+        step = math.degrees(h3core._cell_spacing_rad(res)) * 0.25
+        in_cells, in_pos, bd_cells, bd_pos = [], [], [], []
+        for pos, g in enumerate(geoms):
+            sampled: set = set()
+            inside_raw: set = set()
+            for rings in _ring_parts(g):
+                for ring in rings:
+                    sx, sy, _, _ = _subdivide(ring, step)
+                    sampled.update(int(c) for c in np.unique(h3core.latlng_to_cell(sy, sx, res)))
+                lat_lon = [r[:, [1, 0]] for r in rings]
+                part_cells = h3core.polygon_to_cells(lat_lon[0], res, holes=lat_lon[1:])
+                inside_raw.update(int(c) for c in part_cells)
+            bd_arr = np.array(sorted(sampled), dtype=np.uint64)
+            dilated: set = set()
+            if bd_arr.size:
+                for d in h3core.grid_disk_arrays(bd_arr, 1):
+                    dilated.update(int(x) for x in d)
+            inside = np.array(sorted(inside_raw - dilated), dtype=np.uint64)
+            # compactCells shrinks the interior broadcast ~3-7x (complete
+            # sibling sets fold into parents down to min_res); H3 ids carry
+            # their res, so the mixed-res cover stays ONE bigint column
+            if inside.size and min_res < res:
+                comp = h3core.compact_cells(inside)
+                keep = h3core.get_resolution(comp) >= min_res
+                shallow = comp[~keep]
+                if shallow.size:  # re-expand anything coarser than min_res
+                    comp = np.concatenate(
+                        [comp[keep], h3core.uncompact_cells(shallow, min_res)]
+                    )
+                inside = np.unique(comp)
+            in_cells.extend(inside.tolist())
+            in_pos.extend([pos] * inside.size)
+            bd_cells.extend(sorted(dilated))
+            bd_pos.extend([pos] * len(dilated))
+        return _int64_arrays(in_cells, in_pos, bd_cells, bd_pos)
+
+    def _encode(self, lon, lat):
+        return h3_cell(self.res)(lon, lat)
+
+    _parent = staticmethod(h3_parent_col)
+
+
+# ---------------------------------------------------------------------------
+# Partitioned PIP join (no broadcast of the boundary set)
+# ---------------------------------------------------------------------------
 
 def partitioned_pip_join(
     docs: DataFrame,
@@ -461,12 +489,12 @@ def partitioned_pip_join(
 ) -> DataFrame:
     """Exact PIP join with NO driver-side index and NO broadcast of the
     boundary set — the scale path for boundary tables too large to
-    broadcast (millions of polygons), where ``pip_join`` /
-    ``cover_refine_pip_join`` cannot be used.
+    broadcast (millions of polygons), where ``pip_join`` and the
+    broadcast covers cannot be used.
 
     Scale design: the cell cover of every polygon is computed IN THE
     EXECUTORS (``mapInPandas`` over the boundaries DataFrame, same
-    ``_cover_cells`` kernel as the broadcast path, one polygon at a time).
+    ``_cover_cells`` kernel as ``PolygonCover``, one polygon at a time).
     Fully-inside cover cells become a distributed ``(cell, id)`` table;
     boundary cells carry the polygon WKT with them, so after the single
     equi-join shuffle on the cell id the exact ray-cast refine runs
@@ -483,11 +511,11 @@ def partitioned_pip_join(
     of the two paths because a polygon's inside/border cell sets are
     disjoint and a doc has one res-``res`` cell.
 
-    ``how='left'`` keeps unmatched docs once with a null ``id_col``
-    (requires ``doc_key_cols``, as in ``cover_refine_pip_join``).
+    ``how='left'`` keeps unmatched docs once with a null ``id_col``; it
+    needs a unique doc key in ``doc_key_cols`` because matches come from
+    two paths, so the unmatched set is a key anti-join against the
+    matched set (one extra shuffle on the doc key).
     """
-    from ..functions.cells_udfs import grid_cell_col
-
     id_field = boundaries.schema[id_col]
     cover_schema = StructType(
         [
@@ -498,17 +526,13 @@ def partitioned_pip_join(
     )
 
     def build_cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # ONE _cover_cells pass + ONE output frame per Arrow batch (the
-        # former per-row loop built a pandas frame per polygon — frame
-        # construction overhead, not cover math, dominated with many
-        # polygons per task)
+        # ONE _cover_cells pass + ONE output frame per Arrow batch (frame
+        # construction, not cover math, dominates a frame per polygon)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             geoms = [parse_wkt(w) for w in pdf[wkt_col]]
-            in_cells, in_pos, bd_cells, bd_pos = _cover_cells(
-                geoms, list(range(len(geoms))), res
-            )
+            in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, res)
             if len(in_cells) + len(bd_cells) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
@@ -544,41 +568,32 @@ def partitioned_pip_join(
     )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # each polygon is parsed once per task; the cache is bounded by TOTAL
+        # vertex count (a coastline can outweigh thousands of small polygons):
+        # 2M vertices ~= 32 MB of ring arrays per task
         ring_cache: dict = {}
         cache_verts = 0
-        # bound the cache by TOTAL vertex count, not entry count: a few
-        # coastline-grade polygons can weigh more than thousands of small
-        # ones (ADVICE r2) — 2M vertices ~= 32 MB of ring arrays per task
-        max_cache_verts = 2_000_000
+
+        def parts_of(wkt: str) -> list:
+            nonlocal cache_verts
+            parts = ring_cache.get(wkt)
+            if parts is None:
+                parts = _ring_parts(parse_wkt(wkt))
+                n_verts = sum(len(r) for rings in parts for r in rings)
+                if cache_verts + n_verts <= 2_000_000:
+                    ring_cache[wkt] = parts
+                    cache_verts += n_verts
+            return parts
+
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lons = pdf[lon_col].to_numpy(np.float64)
-            lats = pdf[lat_col].to_numpy(np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            # group candidate rows by polygon; parse each polygon once
-            # (cache survives across batches of the same task)
-            for wkt, grp in pdf.groupby("__wkt", sort=False).groups.items():
-                rings_parts = ring_cache.get(wkt)
-                if rings_parts is None:
-                    g = parse_wkt(wkt)
-                    rings_parts = [
-                        [np.asarray(r, dtype=np.float64)[:, :2] for r in rings]
-                        for rings in g.parts
-                    ]
-                    n_verts = sum(
-                        len(r) for rings in rings_parts for r in rings
-                    )
-                    if cache_verts + n_verts <= max_cache_verts:
-                        ring_cache[wkt] = rings_parts
-                        cache_verts += n_verts
-                idx = np.asarray(grp)
-                inside_m = np.zeros(len(idx), dtype=bool)
-                for rings in rings_parts:
-                    inside_m |= points_in_rings(lons[idx], lats[idx], rings)
-                keep[idx[inside_m]] = True
-            out = pdf.loc[keep, [c for c in pdf.columns if c != "__wkt"]].copy()
-            yield out
+            codes, wkts = pd.factorize(pdf["__wkt"])
+            keep = _refine(
+                codes,
+                pdf[lon_col].to_numpy(np.float64),
+                pdf[lat_col].to_numpy(np.float64),
+                lambda k: parts_of(wkts[k]),
+            )
+            yield pdf.loc[keep].drop(columns=["__wkt"])
 
     refined = cand.mapInPandas(refine, schema=refine_schema)
     matched = fast.unionByName(refined)
@@ -592,181 +607,3 @@ def partitioned_pip_join(
         matched.select(*doc_key_cols).distinct(), on=doc_key_cols, how="left_anti"
     ).withColumn(id_col, F.lit(None).cast(id_field.dataType))
     return matched.unionByName(unmatched)
-
-
-# ---------------------------------------------------------------------------
-# cover-refine PIP on true H3 cells (north-star flagship shape on H3 ids)
-# ---------------------------------------------------------------------------
-
-class H3PolygonCover:
-    """Cover-refine PIP join on canonical H3 cells.
-
-    Driver-side classification per polygon at resolution ``res``:
-
-    * ``border``  — cells the boundary passes through (every ring sampled
-      at 0.25x the cell spacing) DILATED by one kRing. Dilation makes the
-      set conservative: a corner-clipped cell whose boundary arc is
-      shorter than the sampling step is always within one ring of a
-      sampled cell, so no sliver is ever misclassified.
-    * ``inside``  — polygon_to_cells (center containment) minus the
-      dilated border. A cell whose center is inside and which is a full
-      ring away from every boundary-crossed cell is provably contained,
-      so its docs match with NO exact test.
-
-    ``join`` runs ONE vectorized H3 encode over the docs (Arrow), a
-    pure-JVM broadcast equi-join on the bigint cell id for the interior
-    fast path, and the exact ray-cast refine only for dilated-border
-    docs — identical results to ``pip_join``, Python exchange O(N·ε).
-    """
-
-    def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
-                 wkt_col: str, res: int = 3, min_res: int = 0):
-        from ..cells import h3core
-
-        self.id_col = id_col
-        self.res = res
-        self.min_res = min_res
-        ids = boundaries_pdf[id_col].tolist()
-        geoms = [parse_wkt(w) for w in boundaries_pdf[wkt_col].tolist()]
-
-        step = math.degrees(h3core._cell_spacing_rad(res)) * 0.25
-        in_cells, in_pos, bd_cells, bd_pos = [], [], [], []
-        for pos, g in enumerate(geoms):
-            sampled: set = set()
-            inside_raw: set = set()
-            for rings in g.parts:
-                for ring in rings:
-                    r = np.asarray(ring, dtype=np.float64)[:, :2]  # lon, lat
-                    ax, ay = r[:-1, 0], r[:-1, 1]
-                    bx, by = r[1:, 0], r[1:, 1]
-                    seg = np.maximum(np.abs(bx - ax), np.abs(by - ay))
-                    nsub = np.maximum(1, np.ceil(seg / step).astype(np.int64))
-                    idx = np.repeat(np.arange(len(ax)), nsub)
-                    fr = (
-                        np.concatenate([np.arange(k) for k in nsub])
-                        / nsub[idx]
-                    )
-                    sx = ax[idx] + (bx[idx] - ax[idx]) * fr
-                    sy = ay[idx] + (by[idx] - ay[idx]) * fr
-                    cells = h3core.latlng_to_cell(sy, sx, res)
-                    sampled.update(int(c) for c in np.unique(cells))
-                ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-                holes = [
-                    np.asarray(h, dtype=np.float64)[:, [1, 0]]
-                    for h in rings[1:]
-                ]
-                part_cells = h3core.polygon_to_cells(
-                    ext[:, [1, 0]], res, holes=holes
-                )
-                inside_raw.update(int(c) for c in part_cells)
-            bd_arr = np.array(sorted(sampled), dtype=np.uint64)
-            dilated: set = set()
-            if bd_arr.size:
-                for d in h3core.grid_disk_arrays(bd_arr, 1):
-                    dilated.update(int(x) for x in d)
-            inside = np.array(sorted(inside_raw - dilated), dtype=np.uint64)
-            # compactCells shrinks the interior broadcast ~3-7x (complete
-            # sibling sets fold into parents down to min_res); H3 ids carry
-            # their res, so the mixed-res cover stays ONE bigint column and
-            # docs probe it with pure-JVM digit-truncation ancestors
-            if inside.size and min_res < res:
-                comp = h3core.compact_cells(inside)
-                keep = h3core.get_resolution(comp) >= min_res
-                shallow = comp[~keep]
-                if shallow.size:  # re-expand anything coarser than min_res
-                    comp = np.concatenate(
-                        [comp[keep], h3core.uncompact_cells(shallow, min_res)]
-                    )
-                inside = np.unique(comp)
-            for c in inside.tolist():
-                in_cells.append(int(c))
-                in_pos.append(pos)
-            for c in sorted(dilated):
-                bd_cells.append(c)
-                bd_pos.append(pos)
-
-        self.n_inside_cells = len(in_cells)
-        self.n_border_cells = len(bd_cells)
-        self.id_type = (
-            StringType() if boundaries_pdf[id_col].dtype == object else LongType()
-        )
-        self.inside_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"__cell": np.asarray(in_cells, dtype=np.int64),
-                 id_col: [ids[p] for p in in_pos]}
-            ),
-            schema=StructType(
-                [StructField("__cell", LongType()), StructField(id_col, self.id_type)]
-            ),
-        )
-        self.border_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"__cell": np.asarray(bd_cells, dtype=np.int64),
-                 "__pos": np.asarray(bd_pos, dtype=np.int64)}
-            ),
-            schema=StructType(
-                [StructField("__cell", LongType()), StructField("__pos", LongType())]
-            ),
-        )
-        parts_by_pos = [
-            [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
-            for g in geoms
-        ]
-        self._bc = spark.sparkContext.broadcast((parts_by_pos, ids))
-
-    def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-        from ..functions.cells_udfs import h3_cell, h3_parent_col
-
-        id_col = self.id_col
-        tagged = docs.withColumn(
-            "__cell", h3_cell(self.res)(F.col(lon_col), F.col(lat_col))
-        )
-        # interior fast path probes the COMPACTED cover: ONE Arrow encode,
-        # then ancestors at every cover level as pure-JVM digit truncation
-        # (a doc matches a region at <= 1 level — compact sets are
-        # disjoint per region)
-        ancestors = F.array(
-            F.col("__cell"),
-            *[
-                h3_parent_col(F.col("__cell"), self.res, r)
-                for r in range(self.res - 1, self.min_res - 1, -1)
-            ],
-        )
-        probe = tagged.withColumn("__anc", F.explode(ancestors)).drop("__cell")
-        fast = (
-            probe.join(
-                F.broadcast(self.inside_df.withColumnRenamed("__cell", "__anc")),
-                on="__anc",
-            ).drop("__anc")
-        )
-        cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
-
-        bc = self._bc
-        refine_schema = StructType(
-            [f for f in docs.schema.fields] + [StructField(id_col, self.id_type, True)]
-        )
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts_all, ids_local = bc.value
-            ids_arr = np.asarray(ids_local, dtype=object)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lons = pdf[lon_col].to_numpy(np.float64)
-                lats = pdf[lat_col].to_numpy(np.float64)
-                pos = pdf["__pos"].to_numpy(np.int64)
-                keep = np.zeros(len(pdf), dtype=bool)
-                order = np.argsort(pos, kind="stable")
-                bounds = np.flatnonzero(np.diff(pos[order])) + 1
-                for chunk in np.split(order, bounds):
-                    p = int(pos[chunk[0]])
-                    inside = np.zeros(len(chunk), dtype=bool)
-                    for rings in parts_all[p]:
-                        inside |= points_in_rings(lons[chunk], lats[chunk], rings)
-                    keep[chunk[inside]] = True
-                out = pdf.loc[keep].copy()
-                out[id_col] = ids_arr[out["__pos"].to_numpy(np.int64)]
-                yield out.drop(columns=["__pos"])
-
-        refined = cand.mapInPandas(refine, schema=refine_schema)
-        return fast.unionByName(refined)

@@ -62,26 +62,23 @@ def test_repeat_run_identical(spark):
     assert a == b
 
 
-def test_cover_refine_left_matches_brute_left(spark):
-    """VERDICT r1 item 8: cover_refine_pip_join(how='left') must equal
-    pip_join(how='left') — matched (doc, region) pairs identical AND every
-    unmatched doc retained exactly once with a null region id."""
+def test_grid_cover_matches_brute_pip(spark):
+    """PolygonCover.join (grid cover: JVM interior fast path + border
+    refine) must return exactly the pip_join (broadcast R-tree) rows on the
+    overlapping 24-gon boundary set, through both of its paths."""
     from geokitten_spark.fixtures import web_documents, bench_boundaries_pdf
-    from geokitten_spark.operators.pip_join import pip_join, cover_refine_pip_join
+    from geokitten_spark.operators.pip_join import pip_join, PolygonCover
 
     docs = web_documents(spark, SF_SMOKE).select("doc_id", "lon", "lat")
     bnd = bench_boundaries_pdf()
-    brute = pip_join(
-        docs, bnd, id_col="region_key", wkt_col="geometry_wkt", how="left"
-    )
-    cover = cover_refine_pip_join(
-        docs, bnd, id_col="region_key", wkt_col="geometry_wkt", res=9,
-        how="left", doc_key_cols=["doc_id"],
+    brute = pip_join(docs, bnd, id_col="region_key", wkt_col="geometry_wkt")
+    cover = PolygonCover(
+        spark, bnd, id_col="region_key", wkt_col="geometry_wkt", res=9
     )
     b = sorted((r.doc_id, r.region_key) for r in brute.collect())
-    c = sorted((r.doc_id, r.region_key) for r in cover.collect())
-    assert b == c and len(b) >= docs.count()
-    assert any(k is None for _, k in b)  # fixture really has unmatched docs
+    c = sorted((r.doc_id, r.region_key) for r in cover.join(docs).collect())
+    assert b == c and len(b) > 0
+    assert cover.n_inside_cells > 0 and cover.n_border_cells > 0
 
 
 def test_extract_invariant_per_url(spark):
